@@ -488,15 +488,12 @@ class SingerEngine:
         deletes: Optional[DataFrame] = None,
         bounds: Optional[tuple[int, int]] = None,
         touched_hint: Optional[list[int]] = None,
-        rows_hint: Optional[int] = None,
     ) -> None:
         """records / deletes: (record string, _seq long) for ONE stream.
-        ``bounds`` (min seq, max seq over records+deletes), ``touched_hint``
-        (root buckets this batch touches, possibly a safe superset) and
-        ``rows_hint`` (records+deletes row count, an upper bound on merge
-        input after the replay gate) are precomputed by the batch-level
-        stats pass when available — the whole preamble is then one Spark
-        job, and ``rows_hint`` gates the broadcast-keys merge plan."""
+        ``bounds`` (min seq, max seq over records+deletes) and
+        ``touched_hint`` (root buckets this batch touches, possibly a safe
+        superset) are precomputed by the batch-level stats pass when
+        available — the whole preamble is then one Spark job."""
         import time as _time
 
         t_start = _time.time()
@@ -605,8 +602,7 @@ class SingerEngine:
             records = records.cache()
         try:
             self._merge_stream_tables(
-                state, records, deletes, lo, hi, run_base, t_start, touched_hint,
-                rows_hint,
+                state, records, deletes, lo, hi, run_base, t_start, touched_hint
             )
         finally:
             if multi_node:
@@ -622,7 +618,6 @@ class SingerEngine:
         run_base: int,
         t_start: float,
         touched_hint: Optional[list[int]] = None,
-        rows_hint: Optional[int] = None,
     ) -> None:
         meta = state.meta
         with self._phase("snap_io"):
@@ -660,30 +655,11 @@ class SingerEngine:
             if touched is None and meta.children and self.config.orphan_delete_per_batch:
                 # needed again for the bucket-aligned orphan delete below
                 touched = self.catalog.touched_buckets(batch_root, root_snap)
-            # broadcast-keys plan when the batch is provably bounded: the
-            # stats row count is an upper bound on merge input (the replay
-            # gate only shrinks it), so key-set size <= rows_hint. The
-            # shredded batch is cached around the merge: the broadcast key
-            # build is its own (third) Spark job and materializes the cache,
-            # so the main merge job re-reads shredded rows instead of
-            # re-running the from_json shred — raw JSON still parses exactly
-            # once per batch on this path.
-            small = (
-                rows_hint is not None
-                and 0 < rows_hint <= self.config.merge_broadcast_keys_max
-            )
-            if small:
-                batch_root = batch_root.cache()
-            try:
-                with self._phase("root_merge"):
-                    root_snap = M.merge_upsert(
-                        self.catalog, meta.table_name, batch_root,
-                        snap=root_snap, tombstone_col="__ts", touched=touched,
-                        broadcast_keys=small,
-                    )
-            finally:
-                if small:
-                    batch_root.unpersist()
+            with self._phase("root_merge"):
+                root_snap = M.merge_upsert(
+                    self.catalog, meta.table_name, batch_root,
+                    snap=root_snap, tombstone_col="__ts", touched=touched,
+                )
         else:
             if deletes is not None and not deletes.isEmpty():
                 raise ValueError(
@@ -822,7 +798,7 @@ class SingerEngine:
 
         parsed = F.from_json(F.col("record"), to_struct(tree))
         vals = [_column_value(parsed, p, translate) for p in pks]
-        bucket = F.pmod(F.xxhash64(*vals), F.lit(snap.n_buckets)).cast("int")
+        bucket = LakeCatalog.bucket_expr(vals, snap.n_buckets)
         if any(len(p.path) > 1 for p in pks):
             # flat-key delete probe, mirroring _tombstones byte-for-byte
             flat_schema = T.StructType(
@@ -841,7 +817,7 @@ class SingerEngine:
                 else fparsed.getField(p.prop)
                 for p in pks
             ]
-            fbucket = F.pmod(F.xxhash64(*fvals), F.lit(snap.n_buckets)).cast("int")
+            fbucket = LakeCatalog.bucket_expr(fvals, snap.n_buckets)
             return [
                 ((F.col("stream") == stream) & (F.col("type") == "RECORD"), bucket),
                 (
@@ -944,13 +920,12 @@ class SingerEngine:
             if r["raw"] is not None:
                 continue
             if r["type"] in ("RECORD", "DELETED_RECORD"):
-                cur = stream_stats.setdefault(r["stream"], [r["lo"], r["hi"], 0, set(), 0])
+                cur = stream_stats.setdefault(r["stream"], [r["lo"], r["hi"], 0, set()])
                 cur[0] = min(cur[0], r["lo"])
                 cur[1] = max(cur[1], r["hi"])
                 if r["type"] == "DELETED_RECORD":
                     cur[2] += r["n"]
                 cur[3].update(r["buckets"] or [])
-                cur[4] += r["n"]
             else:
                 # reference warn-and-skip (processStream.ts:119-121)
                 log.warning("Message type not handled: %s x%s (first seq %s)",
@@ -959,7 +934,7 @@ class SingerEngine:
         records = parsed.where(F.col("type") == "RECORD")
         deletes = parsed.where(F.col("type") == "DELETED_RECORD")
         tasks = []
-        for stream, (lo, hi, dels, buckets, n_rows) in sorted(stream_stats.items()):
+        for stream, (lo, hi, dels, buckets) in sorted(stream_stats.items()):
             # schema resolution / recovery stays serial (mutates self.streams)
             if stream not in self.streams and not self._recover_stream(stream):
                 raise RecordBeforeSchemaError(
@@ -969,9 +944,9 @@ class SingerEngine:
                 raise RecordBeforeSchemaError(
                     f"Record message received before Schema is defined for [{stream}]"
                 )
-            tasks.append((stream, lo, hi, dels, buckets, n_rows))
+            tasks.append((stream, lo, hi, dels, buckets))
 
-        def apply_one(stream, lo, hi, dels, buckets, n_rows):
+        def apply_one(stream, lo, hi, dels, buckets):
             self._apply_stream_records(
                 self.streams[stream],
                 records.where(F.col("stream") == stream).select("record", SEQ_COL),
@@ -984,7 +959,6 @@ class SingerEngine:
                 # empty set => stream wasn't covered by the stats-time probe
                 # (meta unknown when the job ran) => merge computes it itself
                 touched_hint=sorted(buckets) if buckets else None,
-                rows_hint=n_rows,
             )
 
         # Per-stream merges are independent (disjoint tables, shared read-only

@@ -274,26 +274,34 @@ class LakeCatalog:
 
     # ----------------------------------------------------------------- writes
     @staticmethod
-    def bucket_expr(bucket_by: list[str], n_buckets: int):
-        """Deterministic bucket id of a row. Root tables bucket on their PK,
-        children on their _root_* columns: same key values => same bucket id,
-        which keeps the root/child orphan anti-join bucket-aligned."""
-        return F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(n_buckets)).cast("int")
+    def bucket_expr(bucket_by: list, n_buckets: int):
+        """Deterministic bucket id of a row, ``pmod(xxhash64(keys), n)``: the
+        one definition the write layout, the merge's grouping and the
+        stats-time bucket hints share. ``bucket_by`` holds column names or
+        Column values. Root tables bucket on their PK, children on their
+        _root_* columns: same key values => same bucket id, which keeps the
+        root/child orphan anti-join bucket-aligned."""
+        keys = [F.col(c) if isinstance(c, str) else c for c in bucket_by]
+        return F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
 
     def _write_bucketed(self, name: str, df: DataFrame, snap: TableSnapshot) -> dict[str, list[str]]:
         """Write df partitioned by bucket under a fresh commit dir; return
         {bucket: [relative file paths]}. The bucket column is encoded in the
-        directory name (not stored in the files)."""
+        directory name (not stored in the files). A ``_bucket`` column df
+        already carries is reused, so a frame that is already repartitioned
+        on it (``merge_upsert``) crosses no second exchange here."""
         commit_id = f"c{snap.snapshot_id + 1:06d}-{uuid.uuid4().hex[:8]}"
         rel_dir = os.path.join("data", commit_id)
         out_dir = os.path.join(self._table_dir(name), rel_dir)
         cols = [f.name for f in snap.spark_schema.fields]
-        bucketed = df.withColumn(
-            "_bucket",
-            self.bucket_expr(snap.bucket_by, snap.n_buckets)
-            if snap.bucket_by
-            else F.lit(0),
-        ).select("_bucket", *cols)
+        if "_bucket" not in df.columns:
+            df = df.withColumn(
+                "_bucket",
+                self.bucket_expr(snap.bucket_by, snap.n_buckets)
+                if snap.bucket_by
+                else F.lit(0),
+            )
+        bucketed = df.select("_bucket", *cols)
         if snap.bucket_by:
             # One exchange aligned to the physical layout: without it,
             # partitionBy fans every task out across all bucket dirs

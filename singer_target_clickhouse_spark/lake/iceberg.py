@@ -28,7 +28,6 @@ merge_upsert (D1/2)  MERGE INTO t USING batch s ON <pk equi>
                      the s._ver > t._ver guard — idempotence without the
                      emulation's last_applied_seq gate).
 append (C-rows)      INSERT INTO (children / no-PK roots)
-delete_by_keys (D4)  MERGE INTO ... WHEN MATCHED THEN DELETE
 delete_where (D5)    DELETE FROM t WHERE <cond>
 orphan_delete (D3)   MERGE INTO child USING surviving-roots s
                      ON child._root_* = s.pk AND child._root_ver = s._ver

@@ -5,13 +5,15 @@ Scale notes (the 100 TB story):
 
 - every operator prunes to the buckets its keys touch before reading the
   target, so cost scales with batch size, not table size;
-- the latest-wins dedup is a ``max_by`` hash aggregate per bucket-restricted
-  union: partial aggregation collapses hot keys **map-side**, so a hot
-  (repo, path) receiving millions of updates in one batch reduces to one row
-  per input partition before the exchange — no single task ever sees the
-  full hot-key row set. This is the skew defense (an explicit salted
+- the latest-wins dedup is a ``max_by`` aggregate, which Spark plans as a
+  partial and a final ``SortAggregate`` (the struct buffer rules out the
+  hash aggregate). The partial step collapses hot keys **map-side**, so a
+  hot (repo, path) receiving millions of updates in one batch reduces to one
+  row per input partition before the exchange — no single task ever sees
+  the full hot-key row set. This is the skew defense (an explicit salted
   two-phase reduce is unnecessary because partial agg IS the salted phase,
-  with salt = input partition).
+  with salt = input partition). ``merge_upsert`` runs that partial combine
+  on the batch rows only; the lake rows cross exactly one exchange.
 """
 
 from __future__ import annotations
@@ -32,9 +34,11 @@ def latest_wins(df: DataFrame, pk: list[str], ver_col: str = "_ver") -> DataFram
     Plan shape: ``groupBy(pk).agg(max_by(struct(<non-key cols>), _ver))``
     instead of a per-key ``row_number()`` window. The window form re-shuffles
     every row by pk and sorts inside each partition — a hot key lands on one
-    task. ``max_by`` is a declarative aggregate with partial (map-side)
-    combine: each input partition emits at most one candidate row per key,
-    so the exchange carries O(keys), not O(rows), and skew disappears."""
+    task. ``max_by`` plans as partial + final ``SortAggregate``: the partial
+    (map-side) step emits at most one candidate row per key and input
+    partition, so the exchange carries O(keys), not O(rows), and skew
+    disappears. When the input is already hash-partitioned on some of the
+    ``pk`` columns, the planner adds no exchange at all."""
     others = [c for c in df.columns if c not in pk]
     packed = df.groupBy(*pk).agg(
         F.max_by(F.struct(*[F.col(c) for c in others]), F.col(ver_col)).alias("__top")
@@ -49,10 +53,9 @@ def merge_upsert(
     snap: Optional[TableSnapshot] = None,
     tombstone_col: Optional[str] = None,
     touched: Optional[list[int]] = None,
-    broadcast_keys: bool = False,
 ) -> TableSnapshot:
-    """MERGE INTO … WHEN MATCHED AND s._ver > t._ver THEN UPDATE/DELETE, as
-    union + window over the touched buckets only.
+    """MERGE INTO … WHEN MATCHED AND s._ver > t._ver THEN UPDATE/DELETE,
+    over the touched buckets only.
 
     The batch must carry the full table schema (pks, simple cols, `_ver`),
     plus optionally a boolean ``tombstone_col``: DELETED_RECORD events enter
@@ -62,29 +65,19 @@ def merge_upsert(
     time, which can drop a re-insert landing in the same commit window;
     replay convergence per BASELINE.json requires the ordered form).
 
-    ``broadcast_keys=True`` (round-6, the engine enables it when the batch's
-    row count is known and bounded) switches the cross-set dedup from a
-    full aggregate over target ∪ batch to:
+    One plan, for any batch size and any versions::
 
-        latest_wins(batch)  ∪  (target ANTI-JOIN broadcast(batch pk set))
+        both   = target(touched buckets) ∪ latest_wins(batch)
+        merged = latest_wins(both.repartition(_bucket), [_bucket, *pk])
 
-    which is value-identical because every batch ``_ver`` strictly exceeds
-    every target ``_ver`` for this table: versions derive from the source
-    offset (``_ver = run_seq_base + _seq + 1``), the replay gate drops
-    ``_seq <= last_applied_seq`` before the merge, and a new run re-bases to
-    ``run_seq_base + last_applied_seq + 2`` — above everything committed
-    (``engine._run_base``). So for any key present in the batch the
-    max-``_ver`` row over target ∪ batch IS the max-``_ver`` row of the
-    batch alone, and keys absent from the batch keep their target row
-    untouched. The plan effect (guide §2.3/§2.4): the touched target
-    buckets no longer flow through a pk Exchange + aggregate — they stream
-    scan → broadcast anti-join → the (unavoidable) bucket-layout exchange
-    of the write, so the lake crosses one shuffle per batch instead of two
-    and the aggregate's input shrinks from O(lake + batch) to O(batch).
-    The anti-join key set is key columns only — the classic broadcast-less
-    -than-the-plan trick (guide §8) — and joins null-safely so null pks
-    group exactly like the aggregate did. Correctness of both paths is
-    pinned by a parity test (tests/test_lake.py).
+    The inner ``latest_wins`` is the skew defense on O(batch) rows. The
+    repartition on the bucket id is the only exchange the lake rows cross:
+    it already meets the outer aggregate's clustering on (_bucket, pk), and
+    ``_write_bucketed`` reuses the ``_bucket`` column, so its own
+    repartition on it is the same partitioning and the planner drops it.
+    Each touched bucket is still written by one task, one file per commit.
+    The outer aggregate keeps the max-``_ver`` row over target ∪ batch, so a
+    stale batch row never replaces a newer target row.
 
     Returns the updated (uncommitted) snapshot.
     """
@@ -98,26 +91,13 @@ def merge_upsert(
     if not touched:
         return snap
     target = catalog.read(name, buckets=touched, snap=snap)
-    if broadcast_keys:
-        latest = latest_wins(batch, snap.pk, "_ver")
-        keys = batch.select(*snap.pk).dropDuplicates().select(
-            *[F.col(c).alias(f"__k_{c}") for c in snap.pk]
-        )
-        cond = F.lit(True)
-        for c in snap.pk:
-            cond = cond & target[c].eqNullSafe(F.col(f"__k_{c}"))
-        kept = target.join(F.broadcast(keys), cond, "left_anti")
-        if tombstone_col:
-            latest = latest.where(~F.col(tombstone_col)).drop(tombstone_col)
-        return catalog.overwrite_buckets(name, kept.unionByName(latest), touched, snap)
     if tombstone_col:
         target = target.withColumn(tombstone_col, F.lit(False))
-    # No explicit salting needed: latest_wins is a max_by hash aggregate whose
-    # partial (map-side) combine already collapses hot keys per input
-    # partition before the shuffle. (An explicit salted write was measured
-    # and reverted in round 4: it amplified files-per-commit w-fold and
-    # regressed end-to-end replay; the former ``skew_salt`` knob is removed.)
-    merged = latest_wins(target.unionByName(batch), snap.pk, "_ver")
+    both = target.unionByName(latest_wins(batch, snap.pk, "_ver"))
+    both = both.withColumn(
+        "_bucket", LakeCatalog.bucket_expr(snap.bucket_by, snap.n_buckets)
+    ).repartition("_bucket")
+    merged = latest_wins(both, ["_bucket", *snap.pk], "_ver")
     if tombstone_col:
         merged = merged.where(~F.col(tombstone_col)).drop(tombstone_col)
     return catalog.overwrite_buckets(name, merged, touched, snap)
@@ -134,26 +114,6 @@ def append_rows(
     snap = snap or catalog.snapshot(name)
     cols = [f.name for f in snap.spark_schema.fields]
     return catalog.append(name, batch.select(*cols), snap)
-
-
-def delete_by_keys(
-    catalog: LakeCatalog,
-    name: str,
-    keys: DataFrame,
-    snap: Optional[TableSnapshot] = None,
-) -> TableSnapshot:
-    """Hard delete by PK (reference D4, ``DeletedRecordProcessor.ts:24-58``):
-    anti-join the touched buckets against the key set."""
-    snap = snap or catalog.snapshot(name)
-    if not snap.pk:
-        raise ValueError(f"cannot push deleted record to table {name} without pk")
-    keys = keys.select(*snap.pk).distinct()
-    touched = catalog.touched_buckets(keys, snap)
-    if not touched:
-        return snap
-    target = catalog.read(name, buckets=touched, snap=snap)
-    kept = target.join(F.broadcast(keys), on=snap.pk, how="left_anti")
-    return catalog.overwrite_buckets(name, kept, touched, snap)
 
 
 def delete_where(

@@ -500,34 +500,87 @@ def test_stats_pass_bucket_hint_replaces_touched_job(spark, lake, monkeypatch):
     assert got == [(i, 2) for i in range(5)] + [(i, 1) for i in range(5, 9)]
 
 
+def _steady_batch_lines(spark):
+    schema = json.dumps({
+        "type": "SCHEMA", "stream": "jc", "schema": {"type": "object", "properties": {
+            "id": {"type": "integer"}, "v": {"type": ["null", "integer"]}}},
+        "key_properties": ["id"]})
+    first = [json.dumps({"type": "RECORD", "stream": "jc", "record": {"id": i, "v": 1}})
+             for i in range(10)]
+    steady = [json.dumps({"type": "RECORD", "stream": "jc", "record": {"id": i, "v": 2}})
+              for i in range(10)]
+    steady.append(json.dumps({"type": "DELETED_RECORD", "stream": "jc", "record": {"id": 3}}))
+    return _mk_lines(spark, [schema] + first, 0), _mk_lines(spark, steady, 100)
+
+
 def test_replacing_batch_runs_two_jobs(spark, lake):
     # round-2 VERDICT #7: stats+control+buckets fold into ONE job, so a
-    # replacing single-node batch is stats + merge-write = 2 Spark jobs.
-    # Round 6 adds exactly one more: the broadcast build of the batch key
-    # set (an O(batch) job over the cached shredded rows) that lets the
-    # merge anti-join the target instead of re-aggregating the whole lake —
-    # one full-lake exchange per batch instead of two. Bound stays pinned
-    # so a regression back to per-stream preamble jobs still fails here.
+    # replacing single-node batch is stats + merge-write = 2 Spark jobs. The
+    # merge is one plan with no broadcast build or batch cache of its own,
+    # so a regression to per-stream preamble jobs or an extra merge job
+    # fails here.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        schema = json.dumps({
-            "type": "SCHEMA", "stream": "jc", "schema": {"type": "object", "properties": {
-                "id": {"type": "integer"}, "v": {"type": ["null", "integer"]}}},
-            "key_properties": ["id"]})
         e = engine(spark, lake)
-        recs1 = [json.dumps({"type": "RECORD", "stream": "jc",
-                             "record": {"id": i, "v": 1}}) for i in range(10)]
-        e.apply_lines(_mk_lines(spark, [schema] + recs1, 0))
+        first, steady = _steady_batch_lines(spark)
+        e.apply_lines(first)
 
         sc = spark.sparkContext
         sc.setJobGroup("steady-batch", "job-count probe", False)
-        recs2 = [json.dumps({"type": "RECORD", "stream": "jc",
-                             "record": {"id": i, "v": 2}}) for i in range(10)]
-        e.apply_lines(_mk_lines(spark, recs2, 100))
+        e.apply_lines(steady)
         jobs = sc.statusTracker().getJobIdsForGroup("steady-batch")
-        assert len(jobs) <= 3, f"expected <=3 jobs in steady-state batch, got {len(jobs)}"
+        assert len(jobs) <= 2, f"expected <=2 jobs in steady-state batch, got {len(jobs)}"
     finally:
         spark.sparkContext.setJobGroup("", "", False)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan (py4j SparkPlan), descending into the
+    current plan of an AdaptiveSparkPlanExec."""
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        node = node.executedPlan()
+    out = [node]
+    children = node.children()
+    for i in range(children.size()):
+        out.extend(_plan_nodes(children.apply(i)))
+    return out
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_merge_write_plan_has_one_lake_exchange(spark, lake, monkeypatch, aqe):
+    # The root-merge write plan of a steady batch: lake rows cross exactly
+    # one exchange (the bucket repartition the write reuses), and nothing is
+    # broadcast.
+    from pyspark.sql import DataFrameWriter
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan())
+        return write(self, path, *args, **kwargs)
+
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        e = engine(spark, lake)
+        first, steady = _steady_batch_lines(spark)
+        e.apply_lines(first)
+        monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+        e.apply_lines(steady)
+        [plan] = plans
+        nodes = _plan_nodes(plan)
+        names = [n.getClass().getSimpleName() for n in nodes]
+        assert "BroadcastExchangeExec" not in names
+        lake_exchanges = [
+            n for n in nodes
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            and any(c.getClass().getSimpleName() == "FileSourceScanExec"
+                    for c in _plan_nodes(n))
+        ]
+        assert len(lake_exchanges) == 1, plan.toString()
+        assert rows(e, "jc", "id", "v") == [(i, 2) for i in range(10) if i != 3]
+    finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
@@ -556,8 +609,8 @@ def test_bucket_hint_flat_delete_keys_for_nested_path_pk(spark, lake, monkeypatc
     n_buckets = e.catalog.snapshot("np").n_buckets
     probe = spark.range(8).select(
         F.col("id").cast("int").alias("i"),
-        F.pmod(F.xxhash64(F.col("id").cast("int")), F.lit(n_buckets)).cast("int").alias("b"),
-        F.pmod(F.xxhash64(F.lit(None).cast("int")), F.lit(n_buckets)).cast("int").alias("nb"),
+        cat_mod.LakeCatalog.bucket_expr([F.col("id").cast("int")], n_buckets).alias("b"),
+        cat_mod.LakeCatalog.bucket_expr([F.lit(None).cast("int")], n_buckets).alias("nb"),
     ).collect()
     victim = next(r["i"] for r in probe if r["b"] != r["nb"])
 

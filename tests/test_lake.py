@@ -156,11 +156,22 @@ def test_auto_vacuum_bounds_storage(spark, tmp_path):
     assert got == [(k, 5) for k in range(8)]
 
 
-def test_merge_upsert_broadcast_keys_parity(spark, tmp_path):
-    # round-6: the broadcast-keys merge plan (batch-latest ∪ target anti-join
-    # batch keys) must be value-identical to the aggregate plan over
-    # target ∪ batch — across inserts, updates, tombstones, a same-batch
-    # record+tombstone sequence, and null keys.
+def _latest_wins_reference(live, rows):
+    """Brute-force ordered-tombstone latest-wins: per key the max-_ver row
+    over the live table and the batch wins; a winning tombstone removes
+    the key. live: {k: (v, _ver)}; rows: (k, v, _ver, is_tombstone)."""
+    cand = {k: (v, ver, False) for k, (v, ver) in live.items()}
+    for k, v, ver, ts in rows:
+        if k not in cand or ver > cand[k][1]:
+            cand[k] = (v, ver, ts)
+    return {k: (v, ver) for k, (v, ver, ts) in cand.items() if not ts}
+
+
+def test_merge_upsert_matches_latest_wins_reference(spark, tmp_path):
+    # merge_upsert against a pure-Python latest-wins / ordered-tombstone
+    # reference after every batch: inserts, updates, tombstones, a same-batch
+    # record+tombstone sequence, null keys, and batch rows older than the
+    # target row for the same key (the newer target row must survive).
     from pyspark.sql import types as T
 
     from singer_target_clickhouse_spark.lake import merge as M
@@ -171,10 +182,6 @@ def test_merge_upsert_broadcast_keys_parity(spark, tmp_path):
         T.StructField("v", T.StringType()),
         T.StructField("_ver", T.LongType()),
     ])
-
-    def batch_df(rows):
-        return spark.createDataFrame(rows, "k string, v string, _ver long, __ts boolean")
-
     batches = [
         # inserts incl a null key, an in-batch update, and an in-batch
         # record-then-tombstone (tombstone wins: higher _ver)
@@ -186,25 +193,26 @@ def test_merge_upsert_broadcast_keys_parity(spark, tmp_path):
          (None, "n2", 14, False), ("d", "1", 15, False)],
         # tombstone the null key; touch a single bucket only
         [(None, None, 21, True), ("d", "2", 22, False)],
+        # stale versions: an update and a tombstone below the target _ver
+        # lose to the target rows; a fresh key still inserts
+        [("b", "stale", 7, False), ("d", None, 16, True), ("e", "1", 31, False)],
     ]
 
-    results = {}
-    for mode in (False, True):
-        cat = LakeCatalog(str(tmp_path / f"lake_{mode}"), spark)
-        snap = cat.create_table(
-            "t", schema=schema,
-            ch_columns=[{"name": c, "type": "String", "is_in_sorting_key": c == "k"}
-                        for c in ("k", "v")],
-            pk=["k"], order_by=["k"], engine="replacing",
-            bucket_by=["k"], n_buckets=4,
-        )
-        for rows in batches:
-            snap = M.merge_upsert(cat, "t", batch_df(rows), snap=snap,
-                                  tombstone_col="__ts", broadcast_keys=mode)
-            cat.commit_snapshot("t", snap)
-        results[mode] = sorted(map(tuple, cat.read("t").collect()),
-                               key=lambda r: (r[0] is None, r))
-    assert results[True] == results[False]
-    # and the merged content is what ordered CDC semantics demand
-    assert [(r[0], r[1]) for r in results[True]] == [
-        ("a", "3"), ("b", "2"), ("d", "2")]
+    cat = LakeCatalog(str(tmp_path / "lake"), spark)
+    snap = cat.create_table(
+        "t", schema=schema,
+        ch_columns=[{"name": c, "type": "String", "is_in_sorting_key": c == "k"}
+                    for c in ("k", "v")],
+        pk=["k"], order_by=["k"], engine="replacing",
+        bucket_by=["k"], n_buckets=4,
+    )
+    live: dict = {}
+    for rows in batches:
+        batch = spark.createDataFrame(rows, "k string, v string, _ver long, __ts boolean")
+        snap = M.merge_upsert(cat, "t", batch, snap=snap, tombstone_col="__ts")
+        cat.commit_snapshot("t", snap)
+        live = _latest_wins_reference(live, rows)
+        got = {r["k"]: (r["v"], r["_ver"]) for r in cat.read("t").collect()}
+        assert cat.row_count("t") == len(got) == len(live)
+        assert got == live
+    assert live == {"a": ("3", 13), "b": ("2", 11), "d": ("2", 22), "e": ("1", 31)}
