@@ -1,14 +1,12 @@
 """Engine configuration.
 
 Mirrors the reference's ``src/Config.ts`` knobs where they still make sense on
-Spark, and adds the Spark-native ones (bucket counts, AQE, checkpointing).
+Spark, and adds the Spark-native ones (bucket counts, merge pool, vacuum).
 The reference's row-buffering knobs (``batch_size``, ``insert_stream_timeout``)
-are subsumed by micro-batch triggers and are kept only for documentation
-parity.
+are subsumed by micro-batch triggers and have no counterpart here.
 
-Note the reference defines ``finalize_concurrency`` (default 3,
-``src/Config.ts:32``) but its finalize pool actually uses ``batch_size``
-(``src/processStream.ts:161``). We take the *documented* meaning.
+Finalize uses the merge pool width (``merge_concurrency``): the reference's
+own finalize-concurrency knob is defined but never read (SURVEY F3).
 """
 
 from __future__ import annotations
@@ -46,30 +44,13 @@ class Config:
     #: 100 TB you want O(10k) buckets so a bucket is a few hundred MB.
     n_buckets: int = 32
 
-    #: Run the child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``)
-    #: after every batch instead of only at finalize. Keeps child tables
-    #: always-consistent; cost is bounded by the touched root buckets.
-    orphan_delete_per_batch: bool = True
-
-    #: Assert PK uniqueness after finalize (reference D7,
-    #: ``StreamProcessor.ts:176-193``).
-    assert_pk_integrity: bool = True
-
-    #: Documented-but-unused in the reference; here it bounds how many
-    #: streams finalize concurrently (driver-side thread pool submitting
-    #: independent Spark jobs).
-    finalize_concurrency: int = 3
-
-    #: How many streams' merges run concurrently WITHIN a batch (driver-side
-    #: thread pool, the finalize pattern): per-stream merges touch disjoint
-    #: tables and share only the read-only parse cache, so a multi-stream tap
-    #: (the reference's stream_1 shape is 21 tables) keeps the cluster busy
-    #: instead of idling between per-stream driver barriers. 1 = serial.
+    #: How many streams merge concurrently within a batch, and how many
+    #: finalize concurrently (driver-side thread pool): per-stream work
+    #: touches disjoint tables and shares only the read-only parse cache, so
+    #: a multi-stream tap (the reference's stream_1 shape is 21 tables) keeps
+    #: the cluster busy instead of idling between per-stream driver barriers.
+    #: 1 = serial.
     merge_concurrency: int = 4
-
-    #: Emit per-batch per-table lineage records (source offset range, rows,
-    #: merge stats) to ``<lake>/_metrics/metrics.jsonl``.
-    emit_lineage: bool = True
 
     #: Hard cap on distinct RAW TEXT cleaning-column values collected per
     #: batch (falsy values count toward the cap; a text appearing as both

@@ -11,8 +11,8 @@ dedup key). Scale notes per operator:
   LSH bucket join — candidates only, verified by signature agreement. At
   100 TB the bucket join is the only shuffle and is keyed by band hash, which
   is uniform by construction.
-- **simhash**: per-row 64-bit signature; near-dup = equal signature (or small
-  hamming distance via multi-probe on rotated keys).
+- **simhash**: per-document 64-bit signature (``simhash_profile``): one hash
+  aggregate over the exploded token hashes.
 - **token jaccard**: exploded token self-join; quadratic in bucket size, used
   as the exact verifier for candidate pairs, not as the primary path.
 - **embedding cosine**: see ``similarity`` — pairs above a threshold.
@@ -257,31 +257,6 @@ def simhash_profile(
             F.lit(0).cast("long")
         )
     return sums.select(F.col(id_col), out.alias("simhash"))
-
-
-def _simhash_from_hashes(hashes: Column, bits: int = 48) -> Column:
-    def bit_vote(j: int):
-        return lambda acc, h: acc + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), bit_vote(j))
-        out = out + F.when(vote > 0, F.lit(1).cast("long") * (2 ** j)).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def simhash_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical simhash (strong near-dup signal). Goes
-    through the staged ``simhash_profile`` so each side of the self-join
-    tokenizes+hashes every document exactly once."""
-    s = simhash_profile(df, text_col=text_col, id_col=id_col).select(
-        F.col(id_col).alias("id"), F.col("simhash").alias("sh")
-    )
-    return (
-        s.alias("a")
-        .join(s.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"), F.col("a.sh").alias("simhash"))
-    )
 
 
 # -------------------------------------------------------------- token jaccard

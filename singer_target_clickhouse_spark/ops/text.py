@@ -62,19 +62,11 @@ def stopword_ratio(col: Column) -> Column:
     return _stopword_ratio(tokens(col))
 
 
-def _mean_word_len(toks: Column) -> Column:
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(total / F.size(toks))
-
-
-def mean_word_len(col: Column) -> Column:
-    return _mean_word_len(tokens(col))
-
-
 def _quality_score(col: Column, toks: Column) -> Column:
     length_term = F.least(F.length(col) / F.lit(500.0), F.lit(1.0))
     punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 4, F.lit(1.0))
-    wl = _mean_word_len(toks)
+    chars = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
+    wl = F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(chars / F.size(toks))
     wordlen_term = F.when((wl >= 3) & (wl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
     sw = _stopword_ratio(toks)
     stop_term = F.when((sw > 0.05) & (sw < 0.6), F.lit(1.0)).otherwise(F.lit(0.5))

@@ -1,1 +1,1 @@
-from .driver import KafkaStreamingDriver, StreamingDriver, kafka_source_available  # noqa: F401
+from .driver import StreamingDriver  # noqa: F401

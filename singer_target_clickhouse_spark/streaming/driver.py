@@ -1,9 +1,8 @@
 """Structured-Streaming CDC driver — reference ``processStream`` main loop
 (``src/processStream.ts:126-168``) as a ``readStream`` + ``foreachBatch`` job.
 
-The change log is a directory of JSONL files (a file-backed binlog; a Kafka
-source drops in by replacing ``_read_stream`` and using the Kafka offset as
-``_seq``). Each micro-batch flows through ``SingerEngine.apply_lines``.
+The change log is a directory of JSONL files (a file-backed binlog). Each
+micro-batch flows through ``SingerEngine.apply_lines``.
 
 Exactly-once across restarts:
 
@@ -43,10 +42,10 @@ class StreamingDriver:
         offsets_in_log: bool = False,
     ):
         """``offsets_in_log=True`` declares the log format carries its own
-        offsets (lines are ``<seq>\\tmessage``, like a binlog position /
-        Kafka offset) — `_seq` is then recovered with a JVM-side split, the
-        scalable path. Plain logs fall back to zipWithIndex (per-row Python
-        serialization — fine for fixtures, not for 10^10 events)."""
+        offsets (lines are ``<seq>\\tmessage``, like a binlog position) —
+        `_seq` is then recovered with a JVM-side split and no sidecar. Plain
+        logs number their lines with ``with_line_offsets`` (one extra count
+        job per batch) on top of a durable per-batch base."""
         self.spark = spark
         self.config = config
         self.input_dir = input_dir
@@ -135,7 +134,7 @@ class StreamingDriver:
 
     def _apply_batch_inner(self, batch: DataFrame, batch_id: int) -> None:
         if self.offsets_in_log:
-            # The log carries durable offsets (binlog/Kafka style): recover
+            # The log carries durable offsets (binlog style): recover
             # them JVM-side — no Python in the row path, replay-stable by
             # construction, no sidecar bookkeeping needed.
             split = F.split(F.col("value"), "\t", 2)
@@ -161,18 +160,15 @@ class StreamingDriver:
         self.engine.apply_lines(lines)
 
     # ------------------------------------------------------------------- runs
-    def _read_stream(self) -> DataFrame:
-        reader = self.spark.readStream.format("text")
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.load(self.input_dir)
-
     def run_available(self, finalize: bool = True) -> None:
         """Process everything currently in the directory, then stop
         (``trigger(availableNow)``) — the batch-replay mode of the reference
         CLI, but checkpointed and resumable."""
+        reader = self.spark.readStream.format("text")
+        if self.max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         query = (
-            self._read_stream()
+            reader.load(self.input_dir)
             .writeStream.foreachBatch(self._apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
             .trigger(availableNow=True)
@@ -181,78 +177,3 @@ class StreamingDriver:
         query.awaitTermination()
         if finalize:
             self.engine.finalize()
-
-
-def kafka_source_available(spark: SparkSession) -> bool:
-    """True when the spark-sql-kafka connector jars are on the session."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        return True
-    except Exception:
-        return False
-
-
-class KafkaStreamingDriver(StreamingDriver):
-    """Kafka-backed change log — the production entry point the reference's
-    stdin pipe maps to (``processStream.ts:126`` reads a totally ordered
-    stream; a binlog-style Kafka topic with ONE partition is the same total
-    order). The Kafka record offset IS the durable ``_seq``: recovered
-    JVM-side from the source metadata columns, replay-stable by construction
-    — exactly the ``offsets_in_log`` contract of the file driver, so the
-    engine's exactly-once gate works unchanged.
-
-    Multi-partition topics have no global order and are rejected up front:
-    shard streams across topics (one per tap) rather than partitions, or add
-    a partition-epoch to the seq like Debezium's (partition, offset) pairs.
-
-    Requires the ``spark-sql-kafka-0-10`` connector jars
-    (``kafka_source_available``); tests skip without them."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        config: Config,
-        bootstrap_servers: str,
-        topic: str,
-        checkpoint_dir: str,
-        max_offsets_per_trigger: Optional[int] = None,
-    ):
-        super().__init__(spark, config, input_dir="", checkpoint_dir=checkpoint_dir)
-        self.bootstrap_servers = bootstrap_servers
-        self.topic = topic
-        self.max_offsets_per_trigger = max_offsets_per_trigger
-
-    def _read_stream(self) -> DataFrame:
-        reader = (
-            self.spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("subscribe", self.topic)
-            .option("startingOffsets", "earliest")
-        )
-        if self.max_offsets_per_trigger:
-            reader = reader.option("maxOffsetsPerTrigger", self.max_offsets_per_trigger)
-        return reader.load()
-
-    def _apply_batch_inner(self, batch: DataFrame, batch_id: int) -> None:
-        # Structural single-partition guard (advisor round 2): offsets are
-        # globally unique only within one partition, so ANY partition other
-        # than 0 — even in a batch that happens to contain a single partition
-        # — means the topic is (or became) multi-partition and the offset-as-
-        # seq mapping is unsound. Requiring parts ⊆ {0} detects a later topic
-        # expansion the moment its first record arrives, unlike the previous
-        # per-batch distinct-count check which a skewed batch could slip past.
-        parts = [r["partition"] for r in batch.select("partition").distinct().collect()]
-        if any(p != 0 for p in parts):
-            raise ValueError(
-                f"topic {self.topic} delivered records from partition(s) "
-                f"{sorted(parts)}; a CDC change log must be a single "
-                "totally-ordered partition (partition 0). Shard streams "
-                "across topics, not partitions."
-            )
-        lines = batch.select(
-            F.col("value").cast("string").alias("value"),
-            F.col("offset").cast("long").alias(SEQ_COL),
-        )
-        self.engine.apply_lines(lines)

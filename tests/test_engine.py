@@ -5,6 +5,7 @@ cleaning column, schema evolution, retirement, replay convergence."""
 
 import hashlib
 import json
+import shutil
 
 import pytest
 
@@ -717,10 +718,10 @@ def test_multi_stream_batch_merges_concurrently(spark, lake, tmp_path):
     assert [table_hash(e_par, t) for t in ("s1", "s2", "s3")] == h_before
 
 
-def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
-    # round-3 VERDICT #7: orphan_delete_per_batch=False defers the child
-    # orphan delete to finalize(); final content must equal the per-batch
-    # default across a multi-batch child-bearing replay with re-keyed rows.
+def test_orphan_delete_rekeyed_replay_leaves_no_orphans(spark, lake, tmp_path):
+    # round-3 VERDICT #7: the per-batch child orphan delete across a
+    # multi-batch child-bearing replay with re-keyed rows: superseded root
+    # versions leave no child rows behind.
     schema = json.dumps({
         "type": "SCHEMA", "stream": "po", "schema": {"type": "object", "properties": {
             "id": {"type": "integer"},
@@ -733,22 +734,143 @@ def test_orphan_delete_finalize_only_mode_parity(spark, lake, tmp_path):
                             "record": {"id": i, "tags": [{"t": f"v{ver}a{i}"}, {"t": f"v{ver}b{i}"}]}})
                 for i in range(6)]
 
-    hashes = {}
-    for mode in (True, False):
-        root = str(tmp_path / f"m{mode}")
-        e = engine(spark, root, orphan_delete_per_batch=mode)
-        e.apply_lines(_mk_lines(spark, [schema] + batch(1), 0))
-        e.apply_lines(_mk_lines(spark, batch(2), 100))
-        e.finalize()
-        hashes[mode] = (table_hash(e, "po"), table_hash(e, "po__tags"))
-        # superseded root versions must leave no child orphans either way
-        child = e.catalog.read("po__tags")
-        root_df = e.catalog.read("po")
-        orphans = child.join(
-            root_df.selectExpr("id as _root_id", "_ver as _root_ver"),
-            ["_root_id", "_root_ver"], "left_anti").count()
-        assert orphans == 0
-    assert hashes[True] == hashes[False]
+    e = engine(spark, lake)
+    e.apply_lines(_mk_lines(spark, [schema] + batch(1), 0))
+    e.apply_lines(_mk_lines(spark, batch(2), 100))
+    e.finalize()
+    child = e.catalog.read("po__tags")
+    root_df = e.catalog.read("po")
+    orphans = child.join(
+        root_df.selectExpr("id as _root_id", "_ver as _root_ver"),
+        ["_root_id", "_root_ver"], "left_anti").count()
+    assert orphans == 0
+    assert sorted(r["t"] for r in child.collect()) == sorted(
+        f"v2{x}{i}" for i in range(6) for x in "ab")
+
+
+# ---------------------------------------------------------- crash-point sweep
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _nested_stream_batches(spark, cleaning):
+    """po -> po__tags -> po__tags__subs. Returns (prelude, [batch1, batch2]):
+    the prelude is an earlier run's batch; batch 2 re-keys three roots,
+    deletes one and inserts one. With ``cleaning`` every batch carries a
+    cleaning column whose first-seen values wipe rows of the earlier run."""
+    props = {
+        "id": {"type": "integer"},
+        "tags": {"type": "array", "items": {"type": "object", "properties": {
+            "t": {"type": ["null", "string"]},
+            "subs": {"type": "array", "items": {"type": "object", "properties": {
+                "s": {"type": ["null", "string"]}}}}}}},
+    }
+    msg = {"type": "SCHEMA", "stream": "po", "key_properties": ["id"]}
+    if cleaning:
+        props["grp"] = {"type": ["null", "string"]}
+        msg["cleaning_column"] = "grp"
+    msg["schema"] = {"type": "object", "properties": props}
+    schema = json.dumps(msg)
+
+    def rec(i, tag, grp):
+        r = {"id": i, "tags": [{"t": f"{tag}{i}{x}", "subs": [{"s": f"{tag}{i}{x}{j}"}
+                                                             for j in range(2)]}
+                               for x in "ab"]}
+        if cleaning:
+            r["grp"] = grp
+        return json.dumps({"type": "RECORD", "stream": "po", "record": r})
+
+    prelude = [schema] + [rec(i, "p", f"g{i % 2}") for i in range(8)]
+    b1 = [schema] + [rec(i, "a", "g0") for i in range(6)]
+    b2 = [rec(i, "b", "g1") for i in range(3)] + [
+        json.dumps({"type": "DELETED_RECORD", "stream": "po", "record": {"id": 4}}),
+        rec(9, "b", "g1"),
+    ]
+    return (_mk_lines(spark, prelude, 0),
+            [_mk_lines(spark, b1, 0), _mk_lines(spark, b2, 100)])
+
+
+def _run_with_crash(spark, lake, monkeypatch, batches, crash_at):
+    """Apply ``batches`` as one run whose ``crash_at``-th snapshot commit
+    raises. A restarted engine on the same run id (what a restarted
+    StreamingDriver does) redelivers the batches from the crashed one on;
+    then finalize. Returns (per-table hashes, commits made)."""
+    from singer_target_clickhouse_spark.lake.catalog import LakeCatalog
+
+    cfg = Config(lake_root=lake, n_buckets=4)
+    commit = LakeCatalog.commit_snapshot
+    commits = 0
+
+    def crashing_commit(self, name, snap):
+        nonlocal commits
+        commits += 1
+        if commits == crash_at:
+            raise _Crash(f"crash at commit {commits} ({name})")
+        return commit(self, name, snap)
+
+    monkeypatch.setattr(LakeCatalog, "commit_snapshot", crashing_commit)
+    e = SingerEngine(spark, cfg, run_id="run")
+    crashed = None
+    for i, b in enumerate(batches):
+        try:
+            e.apply_lines(b)
+        except _Crash:
+            crashed = i
+            break
+    monkeypatch.setattr(LakeCatalog, "commit_snapshot", commit)
+    if crash_at is not None:
+        assert crashed is not None, f"no commit #{crash_at}"
+        e = SingerEngine(spark, cfg, run_id="run")
+        for b in batches[crashed:]:
+            e.apply_lines(b)
+    e.finalize()
+    tables = ("po", "po__tags", "po__tags__subs")
+    return {t: table_hash(e, t) for t in tables}, commits
+
+
+@pytest.mark.parametrize("cleaning", [False, True], ids=["nested", "cleaning"])
+def test_crash_at_every_commit_replays_to_clean_state(spark, tmp_path, monkeypatch, cleaning):
+    # A crash at ANY snapshot commit of a child-bearing run, then a replay
+    # from the crashed batch, must converge to the uncrashed state: the root
+    # commit is the batch barrier, so every child commit of a batch (append,
+    # orphan delete, cleaning sweep) has to land before it.
+    prelude, batches = _nested_stream_batches(spark, cleaning)
+    earlier_run = str(tmp_path / "prelude")
+    engine(spark, earlier_run).apply_lines(prelude)
+
+    def lake_after_prelude(name):
+        shutil.copytree(earlier_run, str(tmp_path / name))
+        return str(tmp_path / name)
+
+    clean_lake = lake_after_prelude("clean")
+    clean, n_commits = _run_with_crash(spark, clean_lake, monkeypatch, batches, None)
+    assert n_commits >= 10
+    # the delete (and, with cleaning, both wipes) took effect
+    expected = [0, 1, 2, 3, 5, 9] if cleaning else [0, 1, 2, 3, 5, 6, 7, 9]
+    assert [r[0] for r in rows(engine(spark, clean_lake), "po", "id")] == expected
+    for k in range(1, n_commits + 1):
+        got, _ = _run_with_crash(spark, lake_after_prelude(f"k{k}"), monkeypatch, batches, k)
+        assert got == clean, f"crash at commit {k} of {n_commits}"
+
+
+def test_retired_stream_skipped_by_finalize(spark, lake):
+    # ACTIVE_STREAMS retiring a stream written earlier in the same run: its
+    # tables are renamed away, so finalize must not check them.
+    def schema(stream):
+        return json.dumps({
+            "type": "SCHEMA", "stream": stream, "schema": {"type": "object", "properties": {
+                "id": {"type": "integer"}}}, "key_properties": ["id"]})
+
+    recs = [json.dumps({"type": "RECORD", "stream": s, "record": {"id": i}})
+            for s in ("a", "b") for i in range(3)]
+    e = engine(spark, lake)
+    e.apply_lines(_mk_lines(spark, [schema("a"), schema("b")] + recs, 0))
+    e.apply_lines(_mk_lines(
+        spark, [json.dumps({"type": "ACTIVE_STREAMS", "streams": ["a"]})], 100))
+    e.finalize()
+    assert e.catalog.list_tables() == ["_dropped_b", "a"]
+    assert rows(e, "_dropped_b", "id") == [(0,), (1,), (2,)]
 
 
 def test_multi_stream_pool_failure_aborts_batch(spark, lake, tmp_path):

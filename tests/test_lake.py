@@ -1,17 +1,11 @@
-"""Lake-level maintenance + alternate-source tests: vacuum GC and the Kafka
-batch mapping (connector-less parts)."""
+"""Lake-level tests: vacuum GC and the latest-wins MERGE against a
+pure-Python reference."""
 
 import json
 import os
 
-import pytest
-
 from singer_target_clickhouse_spark.config import Config
 from singer_target_clickhouse_spark.engine import SingerEngine
-from singer_target_clickhouse_spark.streaming import (
-    KafkaStreamingDriver,
-    kafka_source_available,
-)
 
 DATA = "/root/reference/tests/data"
 
@@ -42,60 +36,6 @@ def test_vacuum_reclaims_superseded_files(spark, tmp_path):
     snap = e3.catalog.snapshot("tickets")
     for f in snap.files():
         assert os.path.exists(os.path.join(tdir, f)), f
-
-
-def _kafka_batch(spark, messages, partition=0):
-    rows = [
-        (json.dumps(m).encode("utf-8"), i, partition) for i, m in enumerate(messages)
-    ]
-    return spark.createDataFrame(rows, "value binary, offset long, partition int")
-
-
-def test_kafka_batch_mapping(spark, tmp_path):
-    # the connector-independent part of the Kafka driver: (value, offset) ->
-    # (value string, _seq) feeding the same engine path as offset logs
-    drv = KafkaStreamingDriver(
-        spark, Config(lake_root=str(tmp_path / "lake"), n_buckets=4),
-        bootstrap_servers="none:9092", topic="t", checkpoint_dir=str(tmp_path / "ck"),
-    )
-    msgs = [
-        {"type": "SCHEMA", "stream": "k", "schema": {"type": "object", "properties":
-            {"id": {"type": "integer"}, "v": {"type": ["null", "string"]}}},
-         "key_properties": ["id"]},
-        {"type": "RECORD", "stream": "k", "record": {"id": 1, "v": "a"}},
-        {"type": "RECORD", "stream": "k", "record": {"id": 1, "v": "b"}},
-    ]
-    drv._apply_batch_inner(_kafka_batch(spark, msgs), 0)
-    got = [(r["id"], r["v"]) for r in drv.engine.catalog.read("k").select("id", "v").collect()]
-    assert got == [(1, "b")]
-
-
-def test_kafka_multi_partition_rejected(spark, tmp_path):
-    drv = KafkaStreamingDriver(
-        spark, Config(lake_root=str(tmp_path / "lake2"), n_buckets=4),
-        bootstrap_servers="none:9092", topic="t", checkpoint_dir=str(tmp_path / "ck2"),
-    )
-    rows = [(b"{}", 0, 0), (b"{}", 0, 1)]
-    batch = spark.createDataFrame(rows, "value binary, offset long, partition int")
-    with pytest.raises(ValueError, match="partition"):
-        drv._apply_batch_inner(batch, 0)
-
-
-def test_kafka_probe_is_bool(spark):
-    assert kafka_source_available(spark) in (True, False)
-
-
-def test_kafka_nonzero_partition_rejected_even_if_single(spark, tmp_path):
-    # structural guard: a batch entirely from partition 1 (e.g. after a topic
-    # expansion with skewed delivery) must fail — offsets from partition 1
-    # collide with partition 0's seq space (advisor round 2)
-    drv = KafkaStreamingDriver(
-        spark, Config(lake_root=str(tmp_path / "lake3"), n_buckets=4),
-        bootstrap_servers="none:9092", topic="t", checkpoint_dir=str(tmp_path / "ck3"),
-    )
-    batch = _kafka_batch(spark, [{"type": "STATE", "value": {}}], partition=1)
-    with pytest.raises(ValueError, match="partition"):
-        drv._apply_batch_inner(batch, 0)
 
 
 def test_vacuum_retain_last_keeps_previous_snapshot(spark, tmp_path):
