@@ -37,7 +37,7 @@ import uuid
 from collections import deque
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -57,9 +57,8 @@ from .schema.translator import (
     check_primary_keys_consistency,
     columns_intersection,
     expected_columns,
-    to_qualified_type,
 )
-from .shred import SEQ_COL, _column_value, _translate_scalar, shred_stream
+from .shred import SEQ_COL, _column_value, _parse_schema_for, _translate_scalar, shred_stream
 
 log = logging.getLogger(__name__)
 
@@ -77,9 +76,6 @@ _ENVELOPE = T.StructType(
 class RecordBeforeSchemaError(RuntimeError):
     pass
 
-
-#: sentinel distinguishing "not cached yet" from a cached None (not probeable)
-_PROBE_UNCACHED = object()
 
 #: bound on the in-memory per-batch instrumentation logs (engine.batch_phases,
 #: StreamingDriver.batch_times / batch_phase_log): big enough for any bench or
@@ -175,36 +171,6 @@ class StreamState:
     started_clean: bool = False
 
 
-def _spark_type_of_ch(ch_type: str) -> T.DataType:
-    """Inverse mapping for evolution: qualified CH type string -> Spark type."""
-    inner = ch_type
-    array = False
-    while True:
-        changed = False
-        for mod in ("Nullable", "LowCardinality", "Array"):
-            if inner.startswith(f"{mod}(") and inner.endswith(")"):
-                if mod == "Array":
-                    array = True
-                inner = inner[len(mod) + 1 : -1]
-                changed = True
-        if not changed:
-            break
-    base_map = {
-        "String": T.StringType(), "UUID": T.StringType(), "Date": T.DateType(),
-        "DateTime": T.TimestampType(), "DateTime64": T.TimestampType(),
-        "Int64": T.LongType(), "Int32": T.IntegerType(), "Int16": T.ShortType(),
-        "Int8": T.ByteType(), "UInt64": T.LongType(), "UInt32": T.LongType(),
-        "UInt8": T.BooleanType(), "Float64": T.DoubleType(), "Float32": T.FloatType(),
-        "Int128": T.DecimalType(38, 0),
-    }
-    if inner.startswith("Decimal("):
-        p, s = inner[8:-1].split(",")
-        base: T.DataType = T.DecimalType(int(p), int(s.strip()))
-    else:
-        base = base_map.get(inner, T.StringType())
-    return T.ArrayType(base) if array else base
-
-
 class SingerEngine:
     def __init__(self, spark: SparkSession, config: Optional[Config] = None, run_id: Optional[str] = None):
         self.spark = spark
@@ -231,7 +197,7 @@ class SingerEngine:
         #: driver wall PER BATCH when rebuilt each time. Invalidated whenever
         #: a stream's meta or physical table can change (_process_schema_
         #: message, retirement).
-        self._probe_cache: dict[str, Optional[list]] = {}
+        self._probe_cache: dict[str, list] = {}
 
     @contextmanager
     def _phase(self, name: str):
@@ -262,18 +228,6 @@ class SingerEngine:
         return self.spark.read.json(path)
 
     # ------------------------------------------------------------- DDL layer
-    def _ch_columns_for(self, meta: TableMeta) -> list[dict]:
-        cols = [
-            {"name": c.name, "type": to_qualified_type(c), "is_in_sorting_key": cc}
-            for c, cc in [(c, c.name in meta.order_by_columns()) for c in meta.pk_columns]
-        ] + [
-            {"name": c.name, "type": to_qualified_type(c), "is_in_sorting_key": False}
-            for c in meta.simple_columns
-        ]
-        if meta.version_column:
-            cols.append({"name": meta.version_column, "type": "UInt64", "is_in_sorting_key": False})
-        return cols
-
     def _bucket_by(self, meta: TableMeta) -> list[str]:
         """Root: CURRENT pks; child: _root_* columns (same values as root pks
         => co-bucketed orphan join); no keys: unbucketed append."""
@@ -287,7 +241,7 @@ class SingerEngine:
         self.catalog.create_table(
             meta.table_name,
             schema=meta.target_schema(),
-            ch_columns=self._ch_columns_for(meta),
+            ch_columns=[asdict(c) for c in expected_columns(meta)],
             pk=[c.name for c in meta.pks_of(PKType.CURRENT)] if meta.is_root else [],
             order_by=meta.order_by_columns(),
             engine="replacing" if meta.has_replacing_semantics else "plain",
@@ -321,23 +275,19 @@ class SingerEngine:
             # (jsonSchemaTranslator.ts:186-188); child-node key changes flow
             # through the column diff, as they do there.
             check_primary_keys_consistency(existing, meta)
-        dirty = False
+        spark_types = {f.name: f.dataType for f in meta.target_schema().fields}
         for col in inter["missing"]:
             snap = self.catalog.add_column(
-                meta.table_name, col.name, _spark_type_of_ch(col.type), col.type,
-                snap=snap, defer=True,
+                meta.table_name, col.name, spark_types[col.name], col.type, snap
             )
-            dirty = True
         for mod in inter["modified"]:
+            col = mod["new"]
             snap = self.catalog.modify_column(
-                meta.table_name, mod["new"].name, _spark_type_of_ch(mod["new"].type),
-                mod["new"].type, snap=snap, defer=True,
+                meta.table_name, col.name, spark_types[col.name], col.type, snap
             )
-            dirty = True
         for col in inter["obsolete"]:
-            snap = self.catalog.drop_column(meta.table_name, col.name, snap=snap, defer=True)
-            dirty = True
-        if dirty:
+            snap = self.catalog.drop_column(meta.table_name, col.name, snap)
+        if any(inter.values()):
             self.catalog.commit_snapshot(meta.table_name, snap)
 
     # --------------------------------------------------------------- messages
@@ -361,21 +311,23 @@ class SingerEngine:
             )
         os.replace(tmp, path)
 
-    def _recover_stream(self, stream: str) -> bool:
-        path = os.path.join(self._streams_dir(), f"{stream}.json")
-        if not os.path.exists(path):
-            return False
-        with open(path) as fh:
-            msg = json.load(fh)
-        meta = build_meta(
-            stream,
+    def _meta_of(self, msg: dict) -> TableMeta:
+        """Compile a SCHEMA message (live or persisted) into the stream's meta."""
+        return build_meta(
+            msg["stream"],
             msg["schema"],
             msg.get("key_properties") or [],
             subtable_separator=self.config.subtable_separator,
             cleaning_column=msg.get("cleaning_column"),
             all_key_properties=msg.get("all_key_properties"),
         )
-        self.streams[stream] = StreamState(meta=meta)
+
+    def _recover_stream(self, stream: str) -> bool:
+        path = os.path.join(self._streams_dir(), f"{stream}.json")
+        if not os.path.exists(path):
+            return False
+        with open(path) as fh:
+            self.streams[stream] = StreamState(meta=self._meta_of(json.load(fh)))
         return True
 
     def _process_schema_message(self, msg: dict) -> None:
@@ -387,14 +339,7 @@ class SingerEngine:
         # cached probe branches on next use
         self._probe_cache.pop(stream, None)
         self._persist_stream_schema(msg)
-        meta = build_meta(
-            stream,
-            msg["schema"],
-            msg.get("key_properties") or [],
-            subtable_separator=self.config.subtable_separator,
-            cleaning_column=msg.get("cleaning_column"),
-            all_key_properties=msg.get("all_key_properties"),
-        )
+        meta = self._meta_of(msg)
         clean_first = bool(msg.get("clean_first"))
         if stream in self.config.streams_to_replace:
             self._drop_tree(meta)
@@ -444,41 +389,66 @@ class SingerEngine:
         new_base = snap.run_seq_base + snap.last_applied_seq + 1 - batch_min_seq
         return max(new_base, 0), batch_min_seq - 1
 
+    def _delete_key_struct(self, meta: TableMeta):
+        """A DELETED_RECORD payload (``record`` column) parsed to its key
+        struct. Delete payloads carry their keys FLAT (``{"<prop>": v}``),
+        even for a prop containing the nested-object separator, which
+        records carry nested. With ``translate_values`` on, keys parse as
+        raw strings for ``_delete_keys`` to coerce."""
+        translate = self.config.translate_values
+        return F.from_json(
+            F.col("record"),
+            T.StructType(
+                [
+                    T.StructField(
+                        p.prop, T.StringType() if translate else (p.spark_type or T.StringType())
+                    )
+                    for p in meta.pks_of(PKType.CURRENT)
+                ]
+            ),
+        )
+
+    def _delete_keys(self, meta: TableMeta, parsed) -> list:
+        """The CURRENT-pk values of a ``_delete_key_struct``, one Column per
+        pk. With ``translate_values`` on they go through the same
+        ``_translate_scalar`` coercion as record keys — the reference applies
+        one valueTranslator to both paths (``DeletedRecordProcessor.ts``
+        extractValue), so a string-encoded key like ``{"id": "5"}`` must
+        delete the row record-keyed as ``id=5``."""
+        translate = self.config.translate_values
+        return [
+            _translate_scalar(parsed.getField(p.prop), p) if translate else parsed.getField(p.prop)
+            for p in meta.pks_of(PKType.CURRENT)
+        ]
+
     def _tombstones(self, meta: TableMeta, deletes: DataFrame, run_base: int) -> DataFrame:
         """DELETED_RECORD payloads -> tombstone rows carrying the table schema
         plus a true ``__ts`` flag; they enter the versioned merge so ordering
-        vs RECORDs of the same key is exact (reference D4, upgraded).
-
-        With ``translate_values`` on, key fields parse as raw strings and go
-        through the same ``_translate_scalar`` coercion as record keys — the
-        reference applies one valueTranslator to both paths
-        (``DeletedRecordProcessor.ts`` extractValue), so a string-encoded key
-        like ``{"id": "5"}`` must delete the row record-keyed as ``id=5``."""
+        vs RECORDs of the same key is exact (reference D4, upgraded)."""
         pks = meta.pks_of(PKType.CURRENT)
         if not pks:
             raise ValueError(
                 f"[{meta.prop}] cannot push deleted record to a stream without pk mapping"
             )
-        translate = self.config.translate_values
-        key_schema = T.StructType(
-            [
-                T.StructField(
-                    p.prop, T.StringType() if translate else (p.spark_type or T.StringType())
-                )
-                for p in pks
-            ]
-        )
-        cols = [F.from_json("record", key_schema).alias("k"), F.col(SEQ_COL)]
-        out = deletes.select(*cols)
-        if translate:
-            sel = [_translate_scalar(F.col(f"k.{p.prop}"), p).alias(p.name) for p in pks]
-        else:
-            sel = [F.col(f"k.{p.prop}").alias(p.name) for p in pks]
+        # one parse per payload: the key struct is projected before the keys
+        keyed = deletes.select(self._delete_key_struct(meta).alias("k"), F.col(SEQ_COL))
+        sel = [k.alias(p.name) for k, p in zip(self._delete_keys(meta, F.col("k")), pks)]
         for c in meta.simple_columns:
             sel.append(F.lit(None).cast(c.spark_field_type()).alias(c.name))
         sel.append((F.col(SEQ_COL) + F.lit(run_base + 1)).cast("long").alias(meta.version_column))
         sel.append(F.lit(True).alias("__ts"))
-        return out.select(*sel)
+        return keyed.select(*sel)
+
+    def _commit_applied(
+        self, name: str, snap: TableSnapshot, applied_seq: int, run_base: int
+    ) -> None:
+        """Stamp ``snap`` as this run's (version base ``run_base``, applied
+        through source offset ``applied_seq``) and commit it: the replay gate
+        a restarted run reads back."""
+        snap.last_applied_seq = applied_seq
+        snap.run_id = self.run_id
+        snap.run_seq_base = run_base
+        self.catalog.commit_snapshot(name, snap)
 
     def _apply_stream_records(
         self,
@@ -491,8 +461,9 @@ class SingerEngine:
         """records / deletes: (record string, _seq long) for ONE stream.
         ``bounds`` (min seq, max seq over records+deletes) and
         ``touched_hint`` (root buckets this batch touches, possibly a safe
-        superset) come from the batch-level stats pass, so the whole
-        preamble is one Spark job."""
+        superset; None when the stats-time probe did not cover the stream)
+        come from the batch-level stats pass, so the whole preamble is one
+        Spark job. The root snapshot is read once here and passed through."""
         t_start = time.time()
         meta = state.meta
         lo, hi = bounds
@@ -576,14 +547,8 @@ class SingerEngine:
                 # coalesce: a NULL cleaning value must read "not matched",
                 # not poison delete_where's ``where(~cond)`` filter.
                 cond = F.coalesce(cond, F.lit(False))
-                snap = M.delete_where(self.catalog, meta.table_name, cond, snap=root_snap)
-                snap.cleaned_values = sorted(seen | new_vals)
-                # the wipe's commit opens this run on the root (same version
-                # base and gate as above), so a replay finds the values wiped
-                # and does not wipe, or sweep children, a second time
-                snap.run_id = self.run_id
-                snap.run_seq_base = run_base
-                snap.last_applied_seq = gate
+                root_snap = M.delete_where(self.catalog, meta.table_name, cond, snap=root_snap)
+                root_snap.cleaned_values = sorted(seen | new_vals)
                 if meta.children:
                     # The wipe rewrote root rows across ALL buckets; the
                     # per-batch orphan delete below only covers this batch's
@@ -591,8 +556,11 @@ class SingerEngine:
                     # the wiped root. The sweep commits before the root: a
                     # crash in between leaves the root (and its cleaned
                     # values) unwiped, so the replay wipes and sweeps again.
-                    self._delete_orphans(meta, snap)
-                self.catalog.commit_snapshot(meta.table_name, snap)
+                    self._delete_orphans(meta, root_snap)
+                # the wipe's commit opens this run on the root (same version
+                # base and gate as above), so a replay finds the values wiped
+                # and does not wipe, or sweep children, a second time
+                self._commit_applied(meta.table_name, root_snap, gate, run_base)
 
         multi_node = len(meta.children) > 0
         if multi_node:
@@ -601,7 +569,7 @@ class SingerEngine:
             records = records.cache()
         try:
             self._merge_stream_tables(
-                state, records, deletes, lo, hi, run_base, t_start, touched_hint
+                state, root_snap, records, deletes, lo, hi, run_base, t_start, touched_hint
             )
         finally:
             if multi_node:
@@ -610,17 +578,16 @@ class SingerEngine:
     def _merge_stream_tables(
         self,
         state: StreamState,
+        root_snap: TableSnapshot,
         records: DataFrame,
         deletes: Optional[DataFrame],
         lo: int,
         hi: int,
         run_base: int,
         t_start: float,
-        touched_hint: Optional[list[int]] = None,
+        touched_hint: Optional[list[int]],
     ) -> None:
         meta = state.meta
-        with self._phase("snap_io"):
-            root_snap = self.catalog.snapshot(meta.table_name)
         with self._phase("plan_build"):
             shredded = shred_stream(
                 records, meta, ver_offset=run_base, translate_values=self.config.translate_values
@@ -638,26 +605,24 @@ class SingerEngine:
                 continue  # replay: this child already has the batch
             with self._phase("child_append"):
                 snap = M.append_rows(self.catalog, node.table_name, shredded[node.table_name], snap=snap)
-            snap.last_applied_seq = hi
-            snap.run_id = self.run_id
             with self._phase("commit_io"):
-                self.catalog.commit_snapshot(node.table_name, snap)
+                self._commit_applied(node.table_name, snap, hi, run_base)
                 self._maybe_vacuum(node.table_name, snap)
 
         batch_root = shredded[meta.table_name]
-        touched: Optional[list[int]] = touched_hint
+        touched: Optional[list[int]] = None
         if root_snap.engine == "replacing":
             with self._phase("plan_build"):
                 batch_root = batch_root.withColumn("__ts", F.lit(False))
                 if deletes is not None:
                     batch_root = batch_root.unionByName(self._tombstones(meta, deletes, run_base))
-            if touched is None and meta.children:
-                # needed again for the bucket-aligned orphan delete below
+            # the merge, the orphan delete and lineage all use this one set
+            touched = touched_hint
+            if touched is None:
                 touched = self.catalog.touched_buckets(batch_root, root_snap)
             with self._phase("root_merge"):
                 root_snap = M.merge_upsert(
-                    self.catalog, meta.table_name, batch_root,
-                    snap=root_snap, tombstone_col="__ts", touched=touched,
+                    self.catalog, meta.table_name, batch_root, snap=root_snap, touched=touched
                 )
             if meta.children:
                 # D3 per batch: clean child orphans in the touched buckets
@@ -673,16 +638,13 @@ class SingerEngine:
                 )
             with self._phase("root_merge"):
                 root_snap = M.append_rows(self.catalog, meta.table_name, batch_root, snap=root_snap)
-        root_snap.last_applied_seq = hi
-        root_snap.run_seq_base = run_base
-        root_snap.run_id = self.run_id
         with self._phase("commit_io"):
-            self.catalog.commit_snapshot(meta.table_name, root_snap)
+            self._commit_applied(meta.table_name, root_snap, hi, run_base)
             self._maybe_vacuum(meta.table_name, root_snap)
         # parquet footers read driver-side: lineage adds NO Spark job
         with self._phase("lineage"):
             rows_after = self.catalog.footer_row_count(
-                meta.table_name, buckets=touched, snap=root_snap
+                meta.table_name, snap=root_snap, buckets=touched
             )
         self._emit_metrics(
             {
@@ -715,8 +677,7 @@ class SingerEngine:
                 continue
             child_root_cols = [c.name for c in node.pks_of(PKType.ROOT)]
             snap = M.orphan_delete(
-                self.catalog, node.table_name, root_df, root_pk, child_root_cols,
-                buckets=buckets, snap=None,
+                self.catalog, node.table_name, root_df, root_pk, child_root_cols, buckets=buckets
             )
             self.catalog.commit_snapshot(node.table_name, snap)
 
@@ -730,33 +691,25 @@ class SingerEngine:
         The expression reuses the shredder's own extraction + coercion
         (``_column_value`` over a pk-only ``from_json``), so the stats-time
         bucket of a RECORD equals the bucket its shredded row lands in.
-        DELETED_RECORD payloads carry their keys FLAT (``{"<prop>": v}``,
-        parsed by ``_tombstones`` with a flat ``p.prop`` schema), which
-        differs from the record extraction exactly when a pk prop contains
-        the nested-object separator (``p.path`` longer than 1) — those
-        streams get a separate DELETED_RECORD branch using the identical
-        flat schema, so the probed bucket of a delete equals the bucket its
-        tombstone row lands in (advisor round 3: a nested-path probe on a
-        flat delete key extracts null and hints the wrong bucket, making
-        the hint a corrupting SUBSET). Streams whose meta isn't known yet
-        (SCHEMA arriving in this very batch, or recovery pending) are not
-        covered — their merge falls back to computing touched buckets
-        itself. The probe ignores the replay gate, so on a
+        DELETED_RECORD payloads carry their keys FLAT (``_delete_key_struct``),
+        which differs from the record extraction exactly when a pk prop
+        contains the nested-object separator (``p.path`` longer than 1) —
+        those streams get a separate DELETED_RECORD branch over the same
+        ``_delete_keys`` the tombstones use, so the probed bucket of a delete
+        equals the bucket its tombstone row lands in (advisor round 3: a
+        nested-path probe on a flat delete key extracts null and hints the
+        wrong bucket, making the hint a corrupting SUBSET). Streams whose
+        meta isn't known yet (SCHEMA arriving in this very batch, or recovery
+        pending) are not covered — the engine computes their touched buckets
+        with a separate job. The probe ignores the replay gate, so on a
         partially-replayed batch it can be a SUPERSET of the post-gate
         buckets — always safe (extra buckets merge to identical content),
         never a subset."""
         branches = []
-        translate = self.config.translate_values
         for stream, state in sorted(self.streams.items()):
-            cached = self._probe_cache.get(stream, _PROBE_UNCACHED)
-            if cached is not _PROBE_UNCACHED:
-                if cached is not None:
-                    branches.extend(cached)
-                continue
-            built = self._build_probe_branches(stream, state, translate)
-            self._probe_cache[stream] = built
-            if built is not None:
-                branches.extend(built)
+            if stream not in self._probe_cache:
+                self._probe_cache[stream] = self._build_probe_branches(stream, state.meta)
+            branches.extend(self._probe_cache[stream])
         if not branches:
             return F.lit(None).cast("int")
         expr = F.when(*branches[0])
@@ -764,67 +717,36 @@ class SingerEngine:
             expr = expr.when(cond, b)
         return expr.otherwise(F.lit(None).cast("int"))
 
-    def _build_probe_branches(self, stream, state, translate):
-        """Probe branches for one stream, or None when the stream can't be
+    def _build_probe_branches(self, stream: str, meta: TableMeta) -> list:
+        """Probe branches for one stream; empty when the stream can't be
         probed (no replacing semantics / table missing / bucketing diverged)
-        — None is cached too, so the not-probeable check doesn't re-read the
+        — cached too, so the not-probeable check doesn't re-read the
         snapshot every batch."""
-        meta = state.meta
         if not meta.has_replacing_semantics:
-            return None
+            return []
         if not self.catalog.table_exists(meta.table_name):
-            return None
+            return []
         snap = self.catalog.snapshot(meta.table_name)
         pks = meta.pks_of(PKType.CURRENT)
         if not snap.bucket_by or snap.bucket_by != [p.name for p in pks]:
-            return None
+            return []
 
-        tree: dict = {}
-        for p in pks:
-            node = tree
-            for part in p.path[:-1]:
-                node = node.setdefault(part, {})
-            node[p.path[-1]] = (
-                T.StringType() if translate else (p.spark_type or T.StringType())
-            )
-
-        def to_struct(node: dict) -> T.StructType:
-            return T.StructType(
-                [
-                    T.StructField(
-                        k, to_struct(v) if isinstance(v, dict) else v, True
-                    )
-                    for k, v in node.items()
-                ]
-            )
-
-        parsed = F.from_json(F.col("record"), to_struct(tree))
-        vals = [_column_value(parsed, p, translate) for p in pks]
-        bucket = LakeCatalog.bucket_expr(vals, snap.n_buckets)
+        translate = self.config.translate_values
+        # the shredder's own parse schema and extraction, restricted to the pks
+        key_schema = _parse_schema_for(replace(meta, simple_columns=[], children=[]), translate)
+        parsed = F.from_json(F.col("record"), key_schema)
+        bucket = LakeCatalog.bucket_expr(
+            [_column_value(parsed, p, translate) for p in pks], snap.n_buckets
+        )
         if any(len(p.path) > 1 for p in pks):
-            # flat-key delete probe, mirroring _tombstones byte-for-byte
-            flat_schema = T.StructType(
-                [
-                    T.StructField(
-                        p.prop,
-                        T.StringType() if translate else (p.spark_type or T.StringType()),
-                    )
-                    for p in pks
-                ]
-            )
-            fparsed = F.from_json(F.col("record"), flat_schema)
-            fvals = [
-                _translate_scalar(fparsed.getField(p.prop), p)
-                if translate
-                else fparsed.getField(p.prop)
-                for p in pks
-            ]
-            fbucket = LakeCatalog.bucket_expr(fvals, snap.n_buckets)
+            is_stream = F.col("stream") == stream
             return [
-                ((F.col("stream") == stream) & (F.col("type") == "RECORD"), bucket),
+                (is_stream & (F.col("type") == "RECORD"), bucket),
                 (
-                    (F.col("stream") == stream) & (F.col("type") == "DELETED_RECORD"),
-                    fbucket,
+                    is_stream & (F.col("type") == "DELETED_RECORD"),
+                    LakeCatalog.bucket_expr(
+                        self._delete_keys(meta, self._delete_key_struct(meta)), snap.n_buckets
+                    ),
                 ),
             ]
         return [(F.col("stream") == stream, bucket)]
@@ -959,7 +881,7 @@ class SingerEngine:
                     else None
                 ),
                 # empty set => stream wasn't covered by the stats-time probe
-                # (meta unknown when the job ran) => merge computes it itself
+                # (meta unknown when the job ran) => the engine computes it
                 touched_hint=sorted(buckets) if buckets else None,
             )
 

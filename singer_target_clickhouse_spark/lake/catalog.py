@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Optional
@@ -128,23 +129,15 @@ class LakeCatalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
-        #: optional dict[str, float] the engine points at its per-batch phase
-        #: accumulator; when set, write/commit walls are attributed into it
+        #: the engine's per-batch phase accumulator (``add(phase, seconds)``);
+        #: when set, write/commit walls are attributed into it
         #: (scaling-evidence instrumentation, zero overhead when unset)
-        self.phase_sink: Optional[dict] = None
+        self.phase_sink = None
         os.makedirs(self._tables_dir, exist_ok=True)
 
     def _note(self, phase: str, t0: float) -> None:
-        sink = self.phase_sink
-        if sink is not None:
-            import time
-
-            dt = time.perf_counter() - t0
-            add = getattr(sink, "add", None)
-            if add is not None:  # engine's thread-safe accumulator
-                add(phase, dt)
-            else:
-                sink[phase] = sink.get(phase, 0.0) + dt
+        if self.phase_sink is not None:
+            self.phase_sink.add(phase, time.perf_counter() - t0)
 
     # ------------------------------------------------------------------ paths
     @property
@@ -212,13 +205,7 @@ class LakeCatalog:
 
     def _commit(self, name: str, snap: TableSnapshot) -> None:
         """Atomically publish a snapshot: manifest first, then pointer flip."""
-        import time
-
         t0 = time.perf_counter()
-        self._commit_inner(name, snap)
-        self._note("commit_flip", t0)
-
-    def _commit_inner(self, name: str, snap: TableSnapshot) -> None:
         tdir = self._table_dir(name)
         manifest = f"snap-{snap.snapshot_id:06d}.json"
         with open(os.path.join(tdir, manifest), "w") as fh:
@@ -227,6 +214,7 @@ class LakeCatalog:
         with open(tmp, "w") as fh:
             json.dump({"current": manifest}, fh)
         os.replace(tmp, os.path.join(tdir, "_pointer.json"))
+        self._note("commit_flip", t0)
 
     def commit_snapshot(self, name: str, snap: TableSnapshot) -> None:
         snap.snapshot_id += 1
@@ -255,10 +243,7 @@ class LakeCatalog:
         return self.read(name).count()
 
     def footer_row_count(
-        self,
-        name: str,
-        buckets: Optional[list[int]] = None,
-        snap: Optional[TableSnapshot] = None,
+        self, name: str, snap: TableSnapshot, buckets: Optional[list[int]] = None
     ) -> int:
         """Row count from parquet footer metadata, read driver-side with
         pyarrow — zero Spark jobs. Used by the per-batch lineage emitter so
@@ -266,7 +251,6 @@ class LakeCatalog:
         bucket files; footer reads are O(files) small local IO)."""
         import pyarrow.parquet as pq
 
-        snap = snap or self.snapshot(name)
         total = 0
         for f in self._abs_files(name, snap.files(buckets)):
             total += pq.ParquetFile(f).metadata.num_rows
@@ -316,8 +300,6 @@ class LakeCatalog:
             # gains came entirely from 4x-cores shuffle partitions + 32 MB
             # scan splits (the salt never engaged at the levels that passed).
             bucketed = bucketed.repartition(F.col("_bucket"))
-        import time
-
         t0 = time.perf_counter()
         bucketed.write.partitionBy("_bucket").parquet(out_dir, mode="overwrite")
         self._note("write_job", t0)
@@ -421,33 +403,28 @@ class LakeCatalog:
         return removed
 
     # -------------------------------------------------------------- evolution
+    # Each ALTER updates ``snap`` in place and returns it uncommitted: the
+    # engine applies a table's whole diff, then commits once.
     def add_column(self, name: str, col_name: str, spark_type: T.DataType, ch_type: str,
-                   snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
+                   snap: TableSnapshot) -> TableSnapshot:
         """ADD COLUMN: manifest-only (readers null-fill).
         ≙ reference ``ClickhouseConnection.addColumn`` (ts:38-54)."""
-        snap = snap or self.snapshot(name)
         schema = snap.spark_schema.add(col_name, spark_type, True)
         snap.schema_json = schema.jsonValue()
         snap.ch_columns = snap.ch_columns + [
             {"name": col_name, "type": ch_type, "is_in_sorting_key": False}
         ]
-        if not defer:
-            self.commit_snapshot(name, snap)
         return snap
 
-    def drop_column(self, name: str, col_name: str,
-                    snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
+    def drop_column(self, name: str, col_name: str, snap: TableSnapshot) -> TableSnapshot:
         """DROP COLUMN: manifest-only (scan prunes the column)."""
-        snap = snap or self.snapshot(name)
         schema = T.StructType([f for f in snap.spark_schema.fields if f.name != col_name])
         snap.schema_json = schema.jsonValue()
         snap.ch_columns = [c for c in snap.ch_columns if c["name"] != col_name]
-        if not defer:
-            self.commit_snapshot(name, snap)
         return snap
 
     def modify_column(self, name: str, col_name: str, spark_type: T.DataType, ch_type: str,
-                      snap: Optional[TableSnapshot] = None, defer: bool = False) -> TableSnapshot:
+                      snap: TableSnapshot) -> TableSnapshot:
         """MODIFY COLUMN: rewrite with cast (≙ ClickHouse mutation). Fails the
         whole ALTER when any existing value is unrepresentable in the new
         type, mirroring the reference's abort-on-error
@@ -456,7 +433,6 @@ class LakeCatalog:
         footer-cheap ``limit(1)`` probe with ``try_cast`` BEFORE anything is
         rewritten or the manifest mutated, so an aborted ALTER leaves the
         table untouched (ClickHouse's revert, ``ClickhouseConnection.ts:56-77``)."""
-        snap = snap or self.snapshot(name)
         old = self.read(name, snap=snap)
         violation = (
             old.where(F.col(col_name).isNotNull() & F.col(col_name).try_cast(spark_type).isNull())
@@ -480,7 +456,4 @@ class LakeCatalog:
         snap.ch_columns = [
             {**c, "type": ch_type} if c["name"] == col_name else c for c in snap.ch_columns
         ]
-        snap = self.overwrite_all(name, casted.select(*[f.name for f in fields]), snap)
-        if not defer:
-            self.commit_snapshot(name, snap)
-        return snap
+        return self.overwrite_all(name, casted.select(*[f.name for f in fields]), snap)

@@ -50,15 +50,15 @@ def merge_upsert(
     catalog: LakeCatalog,
     name: str,
     batch: DataFrame,
-    snap: Optional[TableSnapshot] = None,
-    tombstone_col: Optional[str] = None,
-    touched: Optional[list[int]] = None,
+    snap: TableSnapshot,
+    touched: list[int],
 ) -> TableSnapshot:
     """MERGE INTO … WHEN MATCHED AND s._ver > t._ver THEN UPDATE/DELETE,
-    over the touched buckets only.
+    over the ``touched`` buckets only (every bucket a batch key hashes to,
+    or a superset).
 
     The batch must carry the full table schema (pks, simple cols, `_ver`),
-    plus optionally a boolean ``tombstone_col``: DELETED_RECORD events enter
+    plus a boolean ``__ts`` tombstone flag: DELETED_RECORD events enter
     the same versioned merge as tombstone rows, so a delete at offset k kills
     exactly the versions below k and a later re-insert survives — strictly
     ordered CDC semantics (the reference applies buffered DELETEs at commit
@@ -81,52 +81,32 @@ def merge_upsert(
 
     Returns the updated (uncommitted) snapshot.
     """
-    snap = snap or catalog.snapshot(name)
     assert snap.engine == "replacing", f"{name} is not a replacing table"
-    cols = [f.name for f in snap.spark_schema.fields]
-    sel = cols + ([tombstone_col] if tombstone_col else [])
-    batch = batch.select(*sel)
-    if touched is None:
-        touched = catalog.touched_buckets(batch, snap)
+    batch = batch.select(*[f.name for f in snap.spark_schema.fields], "__ts")
     if not touched:
         return snap
-    target = catalog.read(name, buckets=touched, snap=snap)
-    if tombstone_col:
-        target = target.withColumn(tombstone_col, F.lit(False))
+    target = catalog.read(name, buckets=touched, snap=snap).withColumn("__ts", F.lit(False))
     both = target.unionByName(latest_wins(batch, snap.pk, "_ver"))
     both = both.withColumn(
         "_bucket", LakeCatalog.bucket_expr(snap.bucket_by, snap.n_buckets)
     ).repartition("_bucket")
     merged = latest_wins(both, ["_bucket", *snap.pk], "_ver")
-    if tombstone_col:
-        merged = merged.where(~F.col(tombstone_col)).drop(tombstone_col)
+    merged = merged.where(~F.col("__ts")).drop("__ts")
     return catalog.overwrite_buckets(name, merged, touched, snap)
 
 
-def append_rows(
-    catalog: LakeCatalog,
-    name: str,
-    batch: DataFrame,
-    snap: Optional[TableSnapshot] = None,
-) -> TableSnapshot:
+def append_rows(catalog: LakeCatalog, name: str, batch: DataFrame, snap: TableSnapshot) -> TableSnapshot:
     """Plain-MergeTree ingestion: append files, no dedup (children + no-PK
     roots; reference ``RecordProcessor.ts:166``)."""
-    snap = snap or catalog.snapshot(name)
     cols = [f.name for f in snap.spark_schema.fields]
     return catalog.append(name, batch.select(*cols), snap)
 
 
-def delete_where(
-    catalog: LakeCatalog,
-    name: str,
-    condition,
-    snap: Optional[TableSnapshot] = None,
-) -> TableSnapshot:
+def delete_where(catalog: LakeCatalog, name: str, condition, snap: TableSnapshot) -> TableSnapshot:
     """DELETE WHERE <condition> (reference D5 cleaning-column wipe,
     ``StreamProcessor.ts:121-146``). Not key-pruned — the predicate may touch
     any bucket — so this rewrites the full table; the engine bounds how often
     it runs (once per new cleaning value per run, like the reference)."""
-    snap = snap or catalog.snapshot(name)
     target = catalog.read(name, snap=snap)
     return catalog.overwrite_all(name, target.where(~condition), snap)
 
@@ -138,7 +118,6 @@ def orphan_delete(
     root_pk: list[str],
     child_root_cols: list[str],
     buckets: Optional[list[int]] = None,
-    snap: Optional[TableSnapshot] = None,
 ) -> TableSnapshot:
     """Child-orphan delete (reference D3, ``StreamProcessor.ts:148-169``):
     drop child rows whose (root-key…, _root_ver) has no surviving root row.
@@ -147,8 +126,9 @@ def orphan_delete(
     the root's PK bucketing, so when ``buckets`` (the root buckets touched
     this batch) is given, only those child buckets are read and rewritten and
     ``root_df`` can be pre-restricted to the same buckets by the caller.
+    Returns the child's updated (uncommitted) snapshot.
     """
-    snap = snap or catalog.snapshot(child_name)
+    snap = catalog.snapshot(child_name)
     child = catalog.read(child_name, buckets=buckets, snap=snap)
     surviving = root_df.select(
         *[F.col(p).alias(c) for p, c in zip(root_pk, child_root_cols)],
@@ -164,17 +144,13 @@ class PKIntegrityError(RuntimeError):
     pass
 
 
-def assert_pk_integrity(catalog: LakeCatalog, name: str, keys: Optional[list[str]] = None) -> None:
+def assert_pk_integrity(catalog: LakeCatalog, name: str, keys: list[str]) -> None:
     """Post-merge duplicate-key assertion (reference D7,
-    ``StreamProcessor.ts:176-193``, the ``neighbor()`` trick ≙ group-count).
-    ``keys`` defaults to the table's full key set (reference asserts on all
+    ``StreamProcessor.ts:176-193``, the ``neighbor()`` trick ≙ group-count)
+    over ``keys``, the table's full key set (reference asserts on all
     pkMappings: root + parent + current + level)."""
-    snap = catalog.snapshot(name)
-    keys = keys or snap.pk or snap.order_by
-    if not keys:
-        return
     dup = (
-        catalog.read(name, snap=snap)
+        catalog.read(name)
         .groupBy(*keys)
         .count()
         .where(F.col("count") > 1)

@@ -206,9 +206,6 @@ class TableMeta:
     def is_root(self) -> bool:
         return self.level == 0
 
-    def current_pks(self) -> list[ColumnSpec]:
-        return [c for c in self.pk_columns if c.pk_type == PKType.CURRENT]
-
     def pks_of(self, *kinds: PKType) -> list[ColumnSpec]:
         return [c for c in self.pk_columns if c.pk_type in kinds]
 
@@ -232,14 +229,6 @@ class TableMeta:
         if self.is_root:
             return [c.name for c in self.pks_of(PKType.CURRENT)]
         return [c.name for c in self.pks_of(PKType.ROOT, PKType.LEVEL)]
-
-    def all_column_names(self) -> list[str]:
-        """Insert column order (reference ``RecordProcessor.ts:142-148``):
-        pks..., simple cols..., version column."""
-        names = [c.name for c in self.pk_columns] + [c.name for c in self.simple_columns]
-        if self.version_column:
-            names.append(self.version_column)
-        return names
 
     def target_schema(self) -> T.StructType:
         """Spark schema of the physical lake table."""
@@ -283,7 +272,7 @@ class TableMeta:
                     raise SchemaError(f"path conflict at {part}")
             node[path[-1]] = dtype
 
-        for c in self.current_pks() + self.simple_columns:
+        for c in self.pks_of(PKType.CURRENT) + self.simple_columns:
             insert(c.path, c.spark_field_type())
         for ch in self.children:
             insert(ch.prop.split(NESTED_SUB_OBJECT_SEPARATOR), T.StringType())

@@ -8,8 +8,16 @@ Re-expresses the reference's ``src/jsonSchemaTranslator.ts``:
 - ``create_table_ddl`` — the reference's ``CREATE TABLE … ENGINE … ORDER BY``
   statement (``jsonSchemaTranslator.ts:57-78``), emitted for parity tests and
   documentation (the lake itself stores the same facts in its manifest);
-- ``expected_columns`` — the required column set incl. ``_ver``/``_root_ver``
-  and sorting-key flags (``jsonSchemaTranslator.ts:158-183``);
+- ``expected_columns`` — the column descriptors incl. ``_ver``/``_root_ver``
+  and sorting-key flags (``jsonSchemaTranslator.ts:158-183``). One rule
+  serves both table creation (the manifest's ``ch_columns``) and the
+  schema-evolution diff, so a re-sent SCHEMA diffs against exactly what
+  creation stored. Root-ness follows the table tree (``TableMeta.is_root``),
+  deliberately unlike the reference's "has no ROOT pk" test: a child of a
+  keyless root that declares ``all_key_properties`` has no ROOT pk either,
+  and the reference rule would diff it as a root — dropping its level index
+  and ``_root_ver`` and adding ``_ver`` on every later run
+  (``test_keyless_root_child_schema_stable_across_runs``);
 - ``columns_intersection`` — {missing, modified, obsolete}
   (``jsonSchemaTranslator.ts:117-144``);
 - ``check_primary_keys_consistency`` — PK add/remove vs existing sorting key
@@ -91,27 +99,15 @@ def create_table_ddl(database: str, meta: TableMeta, recursive: bool) -> list[st
 
 
 def expected_columns(meta: TableMeta) -> list[Column]:
-    """Required columns vs which an existing table is diffed
-    (reference ``updateSchema``'s expectedColumns, jsonSchemaTranslator.ts:158-183)."""
-    # The reference decides root-ness here by "has no ROOT pk columns".
-    is_root = len(meta.pks_of(PKType.ROOT)) == 0
-    cols: list[Column] = []
-    for c in meta.pk_columns:
-        in_sorting = (
-            c.pk_type == PKType.CURRENT
-            if is_root
-            else c.pk_type in (PKType.ROOT, PKType.LEVEL)
-        )
-        if in_sorting:
-            # PK mappings are never nullable/array, so qualified type == ch_type.
-            cols.append(Column(c.name, c.ch_type, True))
-    for c in meta.pk_columns:
-        if not is_root and c.pk_type in (PKType.CURRENT, PKType.PARENT):
-            cols.append(Column(c.name, c.ch_type, False))
-    for c in meta.simple_columns:
-        cols.append(Column(c.name, to_qualified_type(c), False))
-    if not is_root or meta.pks_of(PKType.CURRENT):
-        cols.append(Column("_ver" if is_root else "_root_ver", "UInt64", False))
+    """The table's column descriptors in physical order (pks, simple
+    columns, version column): what creation stores and what an existing
+    table is diffed against (reference ``updateSchema``'s expectedColumns,
+    jsonSchemaTranslator.ts:158-183)."""
+    sorting = meta.order_by_columns()
+    cols = [Column(c.name, to_qualified_type(c), c.name in sorting) for c in meta.pk_columns]
+    cols += [Column(c.name, to_qualified_type(c), False) for c in meta.simple_columns]
+    if meta.version_column:
+        cols.append(Column(meta.version_column, "UInt64", False))
     return cols
 
 

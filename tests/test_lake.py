@@ -149,7 +149,7 @@ def test_merge_upsert_matches_latest_wins_reference(spark, tmp_path):
     live: dict = {}
     for rows in batches:
         batch = spark.createDataFrame(rows, "k string, v string, _ver long, __ts boolean")
-        snap = M.merge_upsert(cat, "t", batch, snap=snap, tombstone_col="__ts")
+        snap = M.merge_upsert(cat, "t", batch, snap=snap, touched=cat.touched_buckets(batch, snap))
         cat.commit_snapshot("t", snap)
         live = _latest_wins_reference(live, rows)
         got = {r["k"]: (r["v"], r["_ver"]) for r in cat.read("t").collect()}
